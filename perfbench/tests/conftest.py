@@ -1,0 +1,8 @@
+import sys
+from pathlib import Path
+
+BENCH = Path(__file__).resolve().parent.parent
+REPO = BENCH.parent
+for p in (str(BENCH), str(REPO)):
+    if p not in sys.path:
+        sys.path.insert(0, p)
